@@ -1,6 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -16,27 +25,67 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Scale note: each table is a single parquet file locally, but every
   * reader goes through `spark.read.parquet` so a directory of thousands
   * of files on a real cluster binds identically.
+  *
+  * Binding runs no Spark job. Left to infer, `spark.read.parquet`
+  * launches one job per read just to open one footer. Instead
+  * [[read]] reads that footer on the driver, by Spark's own rule with
+  * `mergeSchema` off: the path itself when it is a file, else the
+  * first data file by path in the directory (names led by `_` or `.`
+  * are skipped). The footer is converted with the session's current
+  * `SQLConf` (Spark's row-metadata schema, `nanosAsLong`, NTZ
+  * inference), so the bound schema is the one Spark would infer, and
+  * it is handed to `spark.read.schema(..).parquet(..)`. [[countOf]]
+  * sums the row-group counts of the same footers.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      footer(conf, first), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
 
-  /** Session-cached row count of a fixture table. Corpus-derived layer
-    * parameters (SimHash banding scheme, SRP band width, IVF k, kNN
-    * nProbe, TF-IDF doc total) each re-ran this count per invocation —
-    * a repeated Spark job for a value that is fixed per (session,
-    * sfDir) under the warehouse snapshot assumption [[SessionCache]]
-    * already documents for every derived layer. A miss is a parquet
-    * row-group metadata read (cheap); the cache makes the repeats
-    * free. */
+  /** Session-cached row count of a fixture table: the sum of the
+    * row-group counts in its data files' footers (no Spark job).
+    * Corpus-derived layer parameters (SimHash banding scheme, SRP band
+    * width, IVF k, kNN nProbe, TF-IDF doc total) each ask for it; the
+    * value is fixed per (session, sfDir) under the warehouse snapshot
+    * assumption [[SessionCache]] already documents for every derived
+    * layer, so the footers are read once. */
   private val countCache = new SessionCache[(String, String), java.lang.Long]()
   def countOf(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrCompute(spark, (sfDir, name))(
-      java.lang.Long.valueOf(read(spark, sfDir, name).count())).longValue()
+    countCache.getOrCompute(spark, (sfDir, name)) {
+      val conf = spark.sessionState.newHadoopConf()
+      val rows = dataFiles(conf, s"$sfDir/$name.parquet").map(
+        footer(conf, _).getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
+      java.lang.Long.valueOf(rows)
+    }.longValue()
+
+  /** The table's data files in path order, as Spark lists them: the
+    * path itself when it is a file, else the files of the (flat)
+    * directory whose names are not led by `_` or `.` (`_SUCCESS`,
+    * `.crc` checksums). */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val st = fs.getFileStatus(root)
+    if (st.isFile) Seq(st)
+    else fs.listStatus(root).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.toString)
+  }
+
+  private def footer(conf: Configuration, file: FileStatus): Footer =
+    new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.NO_FILTER))
 
   def region(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "nation")

@@ -364,18 +364,21 @@ object Pq {
       .as[(Long, Array[Float], Array[Int])].collect().sortBy(_._1)
   }
 
-  /** Per-probe rows for RAW-codes scoring — `(qid, probe, lut)` sliced
-    * to `nProbe` (prefix property above). ONE builder shared by the
-    * single-point frame ([[rawQdf]]) and every q167 grid budget, so the
+  /** Per-probe rows for RAW-codes scoring — `(n_probe, qid, probe,
+    * lut)` for every budget in `budgets`, each query's probe list
+    * sliced to the budget (prefix property above). Each query's LUT is
+    * computed once and shared by every budget. ONE builder shared by
+    * the single-point frame ([[rawQdf]]) and the q167 grid, so the
     * grid's rows are the single-point operator's rows by construction,
     * not by copy. */
   private def rawQRows(queries: Array[(Long, Array[Float], Array[Int])],
                        books: Array[Array[Array[Double]]],
-                       nProbe: Int): Seq[(Long, Int, Array[Double])] =
-    queries.toSeq.flatMap { case (qid, qv, probes) =>
-      val lut = lutFor(qv, books)
-      probes.take(nProbe).map(p => (qid, p, lut))
-    }
+                       budgets: Seq[Int]): Seq[(Int, Long, Int, Array[Double])] = {
+    val luts = queries.toSeq.map { case (_, qv, _) => lutFor(qv, books) }
+    for (np <- budgets; ((qid, _, probes), lut) <- queries.toSeq.zip(luts);
+         p <- probes.take(np).toSeq)
+      yield (np, qid, p, lut)
+  }
 
   /** The broadcast (qid, probe, lut) frame for RAW-codes scoring. */
   private def rawQdf(spark: SparkSession,
@@ -383,26 +386,28 @@ object Pq {
                      books: Array[Array[Array[Double]]],
                      nProbe: Int): DataFrame = {
     import spark.implicits._
-    rawQRows(queries, books, nProbe).toDF("qid", "probe", "lut")
+    rawQRows(queries, books, Seq(nProbe)).map { case (_, qid, p, lut) => (qid, p, lut) }
+      .toDF("qid", "probe", "lut")
   }
 
-  /** Per-probe rows for RESIDUAL scoring: per (query, probe) the exact
-    * ⟨q, c_probe⟩ term (ascending-dim double fold, the ivfDot order) +
-    * the shared residual LUT — the one definition of the celldot
-    * arithmetic, shared by [[resQdf]] and the q167 grid. */
+  /** Per-probe rows for RESIDUAL scoring, per budget as in
+    * [[rawQRows]]: per (query, probe) the exact ⟨q, c_probe⟩ term
+    * (ascending-dim double fold, the ivfDot order) + the query's
+    * residual LUT, computed once per query — the one definition of the
+    * celldot arithmetic, shared by [[resQdf]] and the q167 grid. */
   private def resQRows(queries: Array[(Long, Array[Float], Array[Int])],
                        books: Array[Array[Array[Double]]],
                        centroids: Array[Array[Double]],
-                       nProbe: Int): Seq[(Long, Int, Double, Array[Double])] =
-    queries.toSeq.flatMap { case (qid, qv, probes) =>
-      val lut = lutFor(qv, books)
-      probes.take(nProbe).map { p =>
-        var cd = 0.0
-        var i = 0
-        while (i < qv.length) { cd += qv(i).toDouble * centroids(p)(i); i += 1 }
-        (qid, p, cd, lut)
-      }
+                       budgets: Seq[Int]): Seq[(Int, Long, Int, Double, Array[Double])] = {
+    val luts = queries.toSeq.map { case (_, qv, _) => lutFor(qv, books) }
+    for (np <- budgets; ((qid, qv, probes), lut) <- queries.toSeq.zip(luts);
+         p <- probes.take(np).toSeq) yield {
+      var cd = 0.0
+      var i = 0
+      while (i < qv.length) { cd += qv(i).toDouble * centroids(p)(i); i += 1 }
+      (np, qid, p, cd, lut)
     }
+  }
 
   /** The broadcast (qid, probe, celldot, lut) frame for RESIDUAL
     * scoring. */
@@ -412,7 +417,8 @@ object Pq {
                      centroids: Array[Array[Double]],
                      nProbe: Int): DataFrame = {
     import spark.implicits._
-    resQRows(queries, books, centroids, nProbe)
+    resQRows(queries, books, centroids, Seq(nProbe))
+      .map { case (_, qid, p, cd, lut) => (qid, p, cd, lut) }
       .toDF("qid", "probe", "celldot", "lut")
   }
 
@@ -595,12 +601,8 @@ object Pq {
     // one broadcast frame per variant holding EVERY grid point: a
     // (n_probe, qid, probe) row per budget × prefix-sliced probe — a
     // corpus row matches at most one probe row per (n_probe, qid)
-    val rawQ = probes.flatMap(np =>
-        rawQRows(queries, books, np).map { case (qid, p, lut) => (np, qid, p, lut) })
-      .toDF("n_probe", "qid", "probe", "lut")
-    val resQ = probes.flatMap(np =>
-        resQRows(queries, resBooks, centroids, np)
-          .map { case (qid, p, cd, lut) => (np, qid, p, cd, lut) })
+    val rawQ = rawQRows(queries, books, probes).toDF("n_probe", "qid", "probe", "lut")
+    val resQ = resQRows(queries, resBooks, centroids, probes)
       .toDF("n_probe", "qid", "probe", "celldot", "lut")
     // per-variant: candidate join + (n_probe, qid)-windowed top-k —
     // the q137/q141 score expressions verbatim

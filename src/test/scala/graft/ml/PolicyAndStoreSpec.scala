@@ -148,6 +148,23 @@ class PolicyAndStoreSpec extends SparkSpec {
     assert(wide == melted, s"wide $wide vs melted $melted")
   }
 
+  test("wide-input bucketed AUC carries policy names as data, quotes included") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val df = (0 until 200).map(i =>
+      ((i * 37 % 101) / 101.0, (i * 61 % 97) / 97.0, if (i % 3 == 0) 1.0 else 0.0))
+      .toDF("a", "b", "y")
+    val roster = Seq("o'brien" -> col("a"), "x', 0, 0) AS (policy, s) --" -> col("b"))
+    def byPolicy(auc: org.apache.spark.sql.DataFrame) =
+      auc.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
+    val wide = byPolicy(PolicyEval.aucPerPolicyApproxWide(df, roster, col("y")))
+    val melted = byPolicy(PolicyEval.aucPerPolicyApprox(
+      roster.map { case (n, c) => df.select(lit(n).as("policy"), c.as("s"), col("y")) }
+        .reduce(_ union _),
+      col("policy"), col("s"), col("y")))
+    assert(wide.keySet == roster.map(_._1).toSet)
+    assert(wide == melted, s"wide $wide vs melted $melted")
+  }
+
   test("lin_eps explores with frequency ε under its own seeding") {
     import org.apache.spark.sql.functions._
     // The exact seed expression + generator the ε-greedy scorer uses:
