@@ -479,15 +479,16 @@ object SparkEntry {
   )
 
   /** Materialized layers shared across queries — built once per
-    * session and then probed (the index/model discipline of
-    * [[SessionCache]]). Bench builds these BEFORE the timed query
-    * loop and reports their build cost in a separate `layers` map, so
+    * session into the [[SessionCache]] store and then probed. Bench
+    * builds these BEFORE the timed query loop and reports their build
+    * cost in a separate `layers` map, so
     * per-query numbers are plan signals rather than
     * whichever-query-ran-first accounting: without this, the cold IVF
     * k-means fit lands on q117 (alphabetically first consumer) and
     * q44/q127/q128/q129 ride its cache, moving every number whenever
-    * query order changes. Keys here must build exactly the cache
-    * entries the queries probe. */
+    * query order changes. `LayerCoverageSpec` checks that the queries
+    * probe no variant of a layer-built store name beyond those the
+    * layers build. */
   def layers: Map[String, (SparkSession, String) => Unit] = Map(
     // IVF centroid fit at the fixed query k (q44/q117/q127/q128)
     "ivf_centroids_k16" -> ((s, d) => { Ivf.fittedCentroids(s, d, 16, 2); () }),

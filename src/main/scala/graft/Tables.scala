@@ -59,14 +59,12 @@ object Tables {
     * value is fixed per (session, sfDir) under the warehouse snapshot
     * assumption [[SessionCache]] already documents for every derived
     * layer, so the footers are read once. */
-  private val countCache = new SessionCache[(String, String), java.lang.Long]()
   def countOf(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrCompute(spark, (sfDir, name)) {
+    SessionCache.value(spark, "table_count", (sfDir, name)) {
       val conf = spark.sessionState.newHadoopConf()
-      val rows = dataFiles(conf, s"$sfDir/$name.parquet").map(
+      dataFiles(conf, s"$sfDir/$name.parquet").map(
         footer(conf, _).getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
-      java.lang.Long.valueOf(rows)
-    }.longValue()
+    }
 
   /** The table's data files in path order, as Spark lists them: the
     * path itself when it is a file, else the files of the (flat)

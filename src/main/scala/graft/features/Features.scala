@@ -122,12 +122,7 @@ object Features {
     * inverted-index build every term-statistics consumer probes
     * (narrow (doc_id, term, tf) rows, text never retained). */
   def materializedTermFreqs(spark: SparkSession, sfDir: String): DataFrame =
-    termFreqsCache.getOrCompute(spark, sfDir) {
-      termFreqs(spark, sfDir).localCheckpoint()
-    }
-
-  private val termFreqsCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.frame(spark, "term_freqs", sfDir)(termFreqs(spark, sfDir))
 
   /** Per-(doc, term) TF-IDF with sklearn-style smooth idf
     * (`ln((1+N)/(1+df)) + 1`), which is what the reference's TextWiser
@@ -156,12 +151,7 @@ object Features {
     * away from a doubled resident copy.) The layer is LRU-bounded and
     * releases its executor blocks on eviction. */
   def materializedTfidf(spark: SparkSession, sfDir: String): DataFrame =
-    tfidfCache.getOrCompute(spark, sfDir) {
-      tfidf(spark, sfDir).localCheckpoint()
-    }
-
-  private val tfidfCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.frame(spark, "tfidf_postings", sfDir)(tfidf(spark, sfDir))
 
   /** Top-scoring term per document (deterministic tie-break) — the
     * oracle-checkable face of the TF-IDF pipeline. */
@@ -481,24 +471,21 @@ object Features {
     * contraction is asserted against ITS per-doc energy, capture as the
     * decimal-summed global ratio (partitioning-independent by
     * construction — double sums across docs would inherit partial-agg
-    * order). */
+    * order).
+    *
+    * Materialized per (session, sfDir, space) as the
+    * `svd_envelope_<space>` layer: everything in the build (subspace
+    * iteration, the capture action, the basis-residual check) is
+    * expensive and deterministic, and the result is tiny (one row per
+    * doc: the exact energy + five flags). A `value` entry, not a
+    * `frame`: [[buildEnvelope]] checkpoints its result itself, because
+    * it may release its intermediate projection only after that. */
   private def embeddingEnvelope(spark: SparkSession, sfDir: String,
                                 vecs: DataFrame, v: Int, k: Int,
                                 captureFloor: Double,
                                 space: String): DataFrame =
-    envelopeCache.getOrCompute(spark, (sfDir, space)) {
-      buildEnvelope(spark, sfDir, vecs, v, k, captureFloor)
-    }
-
-  /** Per-(session, sfDir, space) materialization of the envelope —
-    * everything in the build (subspace iteration, the capture action,
-    * the basis-residual check) is expensive and deterministic, and the
-    * result is tiny (one row per doc: the exact energy + five flags),
-    * so it lives in the LRU-bounded layer cache like the other
-    * materialized layers, not behind a per-call `.cache()` pinned for
-    * the session lifetime. */
-  private val envelopeCache = new graft.SessionCache[(String, String), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.value(spark, s"svd_envelope_$space", sfDir)(
+      buildEnvelope(spark, sfDir, vecs, v, k, captureFloor))
 
   /** The lazy per-doc projection plan the envelope materializes —
     * exposed separately so the plan audit can assert on the BUILD

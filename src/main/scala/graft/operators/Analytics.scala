@@ -456,13 +456,9 @@ object Analytics {
     // partition count) — repeat callers reuse one checkpoint instead of
     // re-materializing the pipeline each time
     val nParts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    abcCache.getOrCompute(spark, (sfDir, nParts)) {
-      buildRevenueAbc(spark, sfDir, nParts)
-    }
+    graft.SessionCache.value(spark, "revenue_abc", (sfDir, nParts))(
+      buildRevenueAbc(spark, sfDir, nParts))
   }
-
-  private val abcCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private def buildRevenueAbc(spark: SparkSession, sfDir: String,
                               nParts: Int): DataFrame = {
@@ -676,13 +672,13 @@ object Analytics {
     // checkpointed narrow layer, never the text column.
     val tfl = graft.features.Features.materializedTermFreqs(spark, sfDir)
     val uni = tfl.groupBy(col("term").as("w")).agg(sum(col("tf")).as("cw"))
-    // n_tokens folds off the same index; n_bigrams = n_tokens − docs
-    // (split yields ≥ 1 token per non-null row, so per-doc bigrams =
-    // tokens − 1; the lake contract has no null text — see termFreqs)
-    val totals = tfl.agg(sum(col("tf")).as("n_tokens"))
-      .select(col("n_tokens"),
-        (col("n_tokens") - Tables.countOf(spark, sfDir, "documents"))
-          .as("n_bigrams"))
+    // n_tokens and the doc count fold off the same index; n_bigrams =
+    // n_tokens − docs (split yields ≥ 1 token per non-null row, so
+    // per-doc bigrams = tokens − 1). Counting docs in the index, not
+    // the table, leaves out null-text docs, which have no tokens.
+    val totals = tfl.agg(sum(col("tf")).as("n_tokens"),
+        countDistinct(col("doc_id")).as("n_docs"))
+      .select(col("n_tokens"), (col("n_tokens") - col("n_docs")).as("n_bigrams"))
     val bi = tokenPairs(spark, sfDir)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cab"))

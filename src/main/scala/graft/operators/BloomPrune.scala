@@ -61,7 +61,7 @@ object BloomPrune {
                  fpp: Double = 0.01): DataFrame = {
     val cacheKey = (dim.queryExecution.analyzed.canonicalized,
       dimKey, expectedItems, fpp)
-    val bytes = bloomCache.getOrCompute(dim.sparkSession, cacheKey) {
+    val bytes = graft.SessionCache.value(dim.sparkSession, "bloom_filter", cacheKey) {
       val expected =
         if (expectedItems > 0) expectedItems else math.max(dim.count(), 1L)
       val bf = dim.stat.bloomFilter(dimKey, expected, fpp)
@@ -74,10 +74,6 @@ object BloomPrune {
       GraftShims.expression(col(factKey).cast("long"))))
     fact.filter(mightContain)
   }
-
-  private val bloomCache = new graft.SessionCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long, Double),
-    Array[Byte]]()
 
   /** Monthly revenue from URGENT-priority orders: bloom on the filtered
     * order keys prunes ~4/5 of lineitem before the join shuffle. */

@@ -77,15 +77,12 @@ object Dsir {
     * posting layers). */
   def materializedGramCounts(spark: SparkSession, sfDir: String,
                              buckets: Int = DefaultBuckets): DataFrame =
-    gramCache.getOrCompute(spark, (sfDir, buckets)) {
+    graft.SessionCache.frame(spark, "dsir_gram_counts", (sfDir, buckets)) {
       docBucketCounts(
         Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("source"), col("text")),
-        buckets).localCheckpoint()
+        buckets)
     }
-
-  private val gramCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private def docBucketCounts(docs: DataFrame, buckets: Int): DataFrame =
     hashedGrams(docs, buckets)

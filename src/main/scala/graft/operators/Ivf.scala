@@ -94,12 +94,8 @@ object Ivf {
     * [[graft.ml.LinUCB.seededModels]]. */
   def fittedCentroids(spark: SparkSession, sfDir: String, k: Int,
                       iters: Int): Array[Array[Double]] =
-    centroidCache.getOrCompute(spark, (sfDir, k, iters)) {
-      fitCentroids(spark, sfDir, k, iters)
-    }
-
-  private val centroidCache =
-    new graft.SessionCache[(String, Int, Int), Array[Array[Double]]]()
+    graft.SessionCache.value(spark, "ivf_centroids", (sfDir, k, iters))(
+      fitCentroids(spark, sfDir, k, iters))
 
   /** Corpus clustering profile over the IVF cell layer — the
     * topic-bucketing diagnostic a curation pipeline runs before
@@ -210,13 +206,8 @@ object Ivf {
     * dedup. */
   def materializedSemanticKeep(spark: SparkSession, sfDir: String,
                                threshold: Double = 0.4): DataFrame =
-    semKeepCache.getOrCompute(spark, (sfDir, threshold)) {
-      semanticKeep(spark, sfDir, threshold).localCheckpoint()
-    }
-
-  private val semKeepCache =
-    new graft.SessionCache[(String, Double), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.frame(spark, "semantic_keep", (sfDir, threshold))(
+      semanticKeep(spark, sfDir, threshold))
 
   /** The k [[semanticKeep]] will fit for `sfDir` — `kClusters` wins if
     * positive, else [[deriveK]] of the corpus count (a columnar

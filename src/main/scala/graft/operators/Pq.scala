@@ -148,14 +148,11 @@ object Pq {
   def fittedCodebooks(spark: SparkSession, sfDir: String,
                       m: Int = DefaultSubspaces, k: Int = DefaultCodes,
                       iters: Int = DefaultIters): Array[Array[Array[Double]]] =
-    bookCache.getOrCompute(spark, (sfDir, m, k, iters)) {
+    graft.SessionCache.value(spark, "pq_codebooks", (sfDir, m, k, iters)) {
       fitCodebooksFrom(
         Similarity.spread(Tables.embeddings(spark, sfDir))
           .select(col("vec_id"), col("embedding")), m, k, iters)
     }
-
-  private val bookCache =
-    new graft.SessionCache[(String, Int, Int, Int), Array[Array[Array[Double]]]]()
 
   /** (vec_id, codes) — the PQ-ENCODED corpus at the session codebook
     * geometry, materialized once per (session, sfDir, m, k, iters) and
@@ -168,17 +165,13 @@ object Pq {
   def encodedCodes(spark: SparkSession, sfDir: String,
                    m: Int = DefaultSubspaces, k: Int = DefaultCodes,
                    iters: Int = DefaultIters): DataFrame =
-    encCache.getOrCompute(spark, (sfDir, m, k, iters)) {
+    graft.SessionCache.frame(spark, "pq_encoded", (sfDir, m, k, iters)) {
       val books = fittedCodebooks(spark, sfDir, m, k, iters)
       withCodes(Similarity.spread(Tables.embeddings(spark, sfDir))
           .select(col("vec_id"), col("embedding")), books,
           books.head.head.length)
         .select(col("vec_id"), col("codes"))
-        .localCheckpoint()
     }
-
-  private val encCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** (vec_id, cluster, codes) — the IVF-PQ index over RAW-vector codes
     * (the q137/q143 deployment shape and the q167 grid's `raw`
@@ -190,7 +183,7 @@ object Pq {
   def ivfEncodedRaw(spark: SparkSession, sfDir: String, kClusters: Int = 16,
                     m: Int = DefaultSubspaces, k: Int = DefaultCodes,
                     iters: Int = DefaultIters): DataFrame =
-    ivfEncCache.getOrCompute(spark, (sfDir, kClusters, m, k, iters)) {
+    graft.SessionCache.frame(spark, "pq_ivf_encoded", (sfDir, kClusters, m, k, iters)) {
       val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, iters)
       val books = fittedCodebooks(spark, sfDir, m, k, iters)
       withCodes(Similarity.spread(Tables.embeddings(spark, sfDir))
@@ -198,12 +191,7 @@ object Pq {
           .withColumn("cluster", Ivf.assignExpr(centroids)(col("embedding"))),
           books, books.head.head.length)
         .select(col("vec_id"), col("cluster"), col("codes"))
-        .localCheckpoint()
     }
-
-  private val ivfEncCache =
-    new graft.SessionCache[(String, Int, Int, Int, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** (vec_id, cluster, codes) — the FULL-IVFADC index over CELL-RESIDUAL
     * codes (q141/q144 and the grid's `residual` variant), same
@@ -212,7 +200,7 @@ object Pq {
                          kClusters: Int = 16, m: Int = DefaultSubspaces,
                          k: Int = DefaultCodes,
                          iters: Int = DefaultIters): DataFrame =
-    ivfResEncCache.getOrCompute(spark, (sfDir, kClusters, m, k, iters)) {
+    graft.SessionCache.frame(spark, "pq_ivf_encoded_residual", (sfDir, kClusters, m, k, iters)) {
       val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, iters)
       val books = fittedResidualCodebooks(spark, sfDir, kClusters, m, k, iters)
       withCodes(
@@ -220,12 +208,7 @@ object Pq {
             .select(col("vec_id"), col("embedding")), centroids),
           books, books.head.head.length)
         .select(col("vec_id"), col("cluster"), col("codes"))
-        .localCheckpoint()
     }
-
-  private val ivfResEncCache =
-    new graft.SessionCache[(String, Int, Int, Int, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** One query's ADC lookup table — flat m·k doubles, s-major, each
     * entry the subvector/centroid inner product in ascending-dim
@@ -516,16 +499,13 @@ object Pq {
                               kClusters: Int = 16, m: Int = DefaultSubspaces,
                               k: Int = DefaultCodes, iters: Int = DefaultIters)
       : Array[Array[Array[Double]]] =
-    resBookCache.getOrCompute(spark, (sfDir, kClusters, m, k, iters)) {
+    graft.SessionCache.value(spark, "pq_codebooks_residual", (sfDir, kClusters, m, k, iters)) {
       val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, iters)
       fitCodebooksFrom(
         residualFrame(Similarity.spread(Tables.embeddings(spark, sfDir))
           .select(col("vec_id"), col("embedding")), centroids)
           .select(col("vec_id"), col("embedding")), m, k, iters)
     }
-
-  private val resBookCache =
-    new graft.SessionCache[(String, Int, Int, Int, Int), Array[Array[Array[Double]]]]()
 
   /** q136: recall\@k of the PQ index against the exact brute-force
     * baseline — the eval harness every compressed-index deployment

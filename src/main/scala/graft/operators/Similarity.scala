@@ -62,13 +62,8 @@ object Similarity {
     * artifact, not the scan operator. */
   def materializedBruteTopK(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 5): DataFrame =
-    bruteCache.getOrCompute(spark, (sfDir, nQueries, k)) {
-      bruteForceTopK(spark, sfDir, nQueries, k).localCheckpoint()
-    }
-
-  private val bruteCache =
-    new graft.SessionCache[(String, Int, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.frame(spark, "ann_brute_topk", (sfDir, nQueries, k))(
+      bruteForceTopK(spark, sfDir, nQueries, k))
 
   /** Sign-random-projection bucket id: `nPlanes` pseudo-random hyperplanes
     * with weights derived arithmetically from (plane, dim) — fully
@@ -534,13 +529,8 @@ object Similarity {
     * decontamination gate. */
   def materializedEmbeddingDecontam(spark: SparkSession, sfDir: String,
                                     tau: Double = 0.6): DataFrame =
-    embDecontamCache.getOrCompute(spark, (sfDir, tau)) {
-      embeddingDecontam(spark, sfDir, tau).localCheckpoint()
-    }
-
-  private val embDecontamCache =
-    new graft.SessionCache[(String, Double), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.SessionCache.frame(spark, "embedding_decontam", (sfDir, tau))(
+      embeddingDecontam(spark, sfDir, tau))
 
   def lshTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
               nPlanes: Int = 8): DataFrame = {

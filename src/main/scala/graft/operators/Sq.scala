@@ -35,15 +35,12 @@ object Sq {
 
   val Levels = 255
 
-  private val boundsCache =
-    new graft.SessionCache[String, (Seq[Double], Seq[Double])]()
-
   /** Per-dimension (min, max) over the corpus — the whole SQ8 "model".
     * One shuffle of d-keyed partials, a d-row collect, cached per
     * (session, sfDir). */
   def fittedBounds(spark: SparkSession,
                    sfDir: String): (Seq[Double], Seq[Double]) =
-    boundsCache.getOrCompute(spark, sfDir) {
+    graft.SessionCache.value(spark, "sq8_bounds", sfDir) {
       val dims = Tables.embeddings(spark, sfDir)
         .select(posexplode(col("embedding")).as(Seq("i", "v")))
         .groupBy(col("i"))
@@ -109,18 +106,14 @@ object Sq {
     * too). The checkpoint holds 1 int/dim/row — the compressed
     * footprint the format exists to have. */
   def encoded(spark: SparkSession, sfDir: String): DataFrame =
-    encodedCache.getOrCompute(spark, sfDir) {
+    graft.SessionCache.frame(spark, "sq8_encoded", sfDir) {
       val (mn, mx) = fittedBounds(spark, sfDir)
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"),
           typedLit(mn).as("mns"), typedLit(mx).as("mxs"))
         .withColumn("codes", encodeCodes("embedding"))
         .select(col("vec_id"), col("codes"))
-        .localCheckpoint()
     }
-
-  private val encodedCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** (vec_id, cluster, codes) — the IVF-SQ8 index: the encoded corpus
     * plus its coarse-quantizer cell, the FAISS `IVF…,SQ8` on-disk
@@ -132,7 +125,7 @@ object Sq {
     * cells' scan — the index-build/serve split the flat scan lacks. */
   def ivfEncoded(spark: SparkSession, sfDir: String,
                  kClusters: Int = 16): DataFrame =
-    ivfEncodedCache.getOrCompute(spark, (sfDir, kClusters)) {
+    graft.SessionCache.frame(spark, "sq8_ivf_encoded", (sfDir, kClusters)) {
       val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, 2)
       val (mn, mx) = fittedBounds(spark, sfDir)
       Tables.embeddings(spark, sfDir)
@@ -141,12 +134,7 @@ object Sq {
         .withColumn("cluster", Ivf.assignExpr(centroids)(col("embedding")))
         .withColumn("codes", encodeCodes("embedding"))
         .select(col("vec_id"), col("cluster"), col("codes"))
-        .localCheckpoint()
     }
-
-  private val ivfEncodedCache =
-    new graft.SessionCache[(String, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** q169: asymmetric SQ8 top-k — exact query vectors against the
     * reconstructed corpus, ranked by the 4dp-rounded inner product

@@ -671,6 +671,22 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == expected, s"PMI diverges:\n$got\nvs\n$expected")
   }
 
+  test("bigram PMI ignores a null-text document") {
+    val corpus = Seq("new york is a big city", "new york is old",
+      "the big city is new york", "a big city never sleeps", "new york new york")
+    def lakeOf(texts: Seq[String]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("pmi_lake").toString
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    def pmi(dir: String) = Analytics.bigramPmi(spark, dir, k = 20, minCount = 2)
+      .collect().map(r => (r.getAs[String]("bigram"), r.getAs[Double]("pmi"))).toSeq
+    val clean = pmi(lakeOf(corpus))
+    assert(clean.nonEmpty, "planted corpus yields no bigram above minCount")
+    assert(pmi(lakeOf(corpus :+ null)) == clean, "a null-text doc moved PMI")
+  }
+
   test("feature MI: terms equal a naive recompute and sum to a non-negative MI") {
     val collected = Analytics.featureMi(spark, sf("0.001")).collect()
     val got = collected
